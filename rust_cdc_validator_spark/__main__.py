@@ -23,7 +23,6 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-from datetime import datetime, timezone
 
 from rust_cdc_validator_spark.api import CdcPayload, CdcValidator
 from rust_cdc_validator_spark.session import get_spark
@@ -42,12 +41,6 @@ def _load_catalog(path: str) -> StaticCatalog:
         for schema, ts in raw.items()
     }
     return StaticCatalog(tables)
-
-
-def _parse_date(s: str | None) -> datetime | None:
-    if not s:
-        return None
-    return datetime.fromisoformat(s).replace(tzinfo=timezone.utc)
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -340,8 +333,8 @@ def main(argv: list[str] | None = None) -> int:
         included_tables=args.included_tables,
         excluded_tables=args.excluded_tables,
         mode=FileMode(args.mode),
-        start_date=_parse_date(args.start_date),
-        stop_date=_parse_date(args.stop_date),
+        start_date=args.start_date,
+        stop_date=args.stop_date,
         absolute_path=args.absolute_path,
         chunk_size=args.chunk_size,
         start_position=args.start_position,

@@ -24,10 +24,11 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 
+from rust_cdc_validator_spark.operators import state
 from rust_cdc_validator_spark.operators.diff import DiffReport, diff_tables
-from rust_cdc_validator_spark.operators.replay import replay_snapshot
+from rust_cdc_validator_spark.operators.replay import read_change_log, replay_snapshot
 from rust_cdc_validator_spark.sources.catalog import Catalog
-from rust_cdc_validator_spark.sources.manifest import FileMode, discover_files
+from rust_cdc_validator_spark.sources.manifest import FileMode, _utc, discover_files
 
 
 @dataclass
@@ -58,15 +59,29 @@ class CdcPayload:
             # (main.rs:60-63, required unless only_snapshot of a full load)
             raise ValueError("DATE_AWARE mode requires start_date")
         # accept ISO strings for the date bounds (the reference client takes
-        # "YYYY-MM-DDTHH:MM:SSZ" strings, main.rs:60-68) — naive values are
-        # pinned to UTC exactly like the CLI's _parse_date
+        # "YYYY-MM-DDTHH:MM:SSZ" strings, main.rs:60-68) — the CLI passes
+        # its flags through here; naive values are pinned to UTC, an empty
+        # string means "no bound"
         for f_ in ("start_date", "stop_date"):
             val = getattr(self, f_)
             if isinstance(val, str):
-                dt = datetime.fromisoformat(val.replace("Z", "+00:00"))
-                if dt.tzinfo is None:
+                dt = datetime.fromisoformat(val.replace("Z", "+00:00")) if val else None
+                if dt is not None and dt.tzinfo is None:
                     dt = dt.replace(tzinfo=timezone.utc)
                 object.__setattr__(self, f_, dt)
+
+
+def _fan_out(payload: CdcPayload, tables: list[str], fn) -> dict:
+    """``{t: fn(t)}`` for every table, run on a bounded driver-side thread
+    pool (reference: NUM_OF_BUFFERS concurrent table pipelines,
+    cdc_operator.rs:237-248) — each table's work is a handful of
+    driver-blocking Spark actions, so N tables submitted from N threads let
+    the scheduler interleave their stages instead of serializing N action
+    latencies. Results keep the order of ``tables``; the first failure
+    raises."""
+    with ThreadPoolExecutor(max_workers=max(1, min(payload.max_parallel_tables, 32))) as ex:
+        futures = {t: ex.submit(fn, t) for t in tables}
+        return {t: fut.result() for t, fut in futures.items()}
 
 
 class CdcValidator:
@@ -87,9 +102,8 @@ class CdcValidator:
             exclude=payload.excluded_tables or None,
         )
 
-    def snapshot_table(self, payload: CdcPayload, table: str) -> DataFrame:
-        """Reconstruct one table's final state from its LOAD+CDC files."""
-        entries = discover_files(
+    def _discover(self, payload: CdcPayload, table: str):
+        return discover_files(
             self.spark,
             self.table_root(payload, table),
             mode=payload.mode,
@@ -97,6 +111,10 @@ class CdcValidator:
             stop_date=payload.stop_date,
             absolute_path=payload.absolute_path,
         )
+
+    def snapshot_table(self, payload: CdcPayload, table: str) -> DataFrame:
+        """Reconstruct one table's final state from its LOAD+CDC files."""
+        entries = self._discover(payload, table)
         columns = self.catalog.get_table_columns(payload.schema, table)
         pk = self.catalog.get_primary_key(payload.schema, table)
         return replay_snapshot(
@@ -105,13 +123,10 @@ class CdcValidator:
 
     def snapshot(self, payload: CdcPayload) -> dict[str, DataFrame]:
         """All tables, fanned out like cdc_operator.rs:237-248."""
-        tables = self._tables(payload)
-        results: dict[str, DataFrame] = {}
-        with ThreadPoolExecutor(max_workers=max(1, min(payload.max_parallel_tables, 32))) as ex:
-            futures = {t: ex.submit(self.snapshot_table, payload, t) for t in tables}
-            for t, fut in futures.items():
-                results[t] = fut.result()
-        return results
+        return _fan_out(
+            payload, self._tables(payload),
+            lambda t: self.snapshot_table(payload, t),
+        )
 
     def validate(
         self,
@@ -128,39 +143,27 @@ class CdcValidator:
         the same tables repeatedly pass them back to skip each table's
         spec pass (see ``operators/diff.py:compute_chunk_spec``).
 
-        Tables diff CONCURRENTLY via the same driver-side thread-pool
-        fan-out as ``snapshot`` (reference: NUM_OF_BUFFERS=80 concurrent
-        table pipelines, cdc_operator.rs:237-248) — each table's diff is a
-        handful of driver-blocking Spark actions, so N tables submitted
-        from N threads let the scheduler interleave their stages instead
-        of serializing N action latencies. Catalog lookups stay on the
-        calling thread (JDBC catalogs aren't assumed thread-safe)."""
+        Tables diff CONCURRENTLY via the same fan-out as ``snapshot``.
+        Catalog lookups stay on the calling thread (JDBC catalogs aren't
+        assumed thread-safe)."""
         tables = [
             t
             for t in self._tables(payload)
             if t in source_frames and t in target_frames
         ]
         pks = {t: self.catalog.get_primary_key(payload.schema, t) for t in tables}
-        reports: dict[str, DiffReport] = {}
-        with ThreadPoolExecutor(
-            max_workers=max(1, min(payload.max_parallel_tables, 32))
-        ) as ex:
-            futures = {
-                t: ex.submit(
-                    diff_tables,
-                    source_frames[t],
-                    target_frames[t],
-                    primary_key=pks[t],
-                    chunk_size=payload.chunk_size,
-                    start_position=payload.start_position,
-                    table=t,
-                    chunk_spec=(chunk_specs or {}).get(t),
-                )
-                for t in tables
-            }
-            for t, fut in futures.items():
-                reports[t] = fut.result()
-        return reports
+        return _fan_out(
+            payload, tables,
+            lambda t: diff_tables(
+                source_frames[t],
+                target_frames[t],
+                primary_key=pks[t],
+                chunk_size=payload.chunk_size,
+                start_position=payload.start_position,
+                table=t,
+                chunk_spec=(chunk_specs or {}).get(t),
+            ),
+        )
 
     def advance_state(
         self,
@@ -194,74 +197,47 @@ class CdcValidator:
         half-open, so a file whose mtime equals the shared boundary lands
         in exactly the later run).
         """
-        from rust_cdc_validator_spark.operators.replay import with_sequence
-        from rust_cdc_validator_spark.operators.state import (
-            merge_into_state,
-            merge_into_state_touched,
-            _bucket_count,
-            save_state_bucketed,
-        )
-        from rust_cdc_validator_spark.sources.catalog import check_schema_containment
-        from rust_cdc_validator_spark.sources.manifest import build_manifest, discover_files
-
-        entries = [
-            e
-            for e in discover_files(
-                self.spark,
-                self.table_root(payload, table),
-                mode=payload.mode,
-                start_date=payload.start_date,
-                stop_date=payload.stop_date,
-                absolute_path=payload.absolute_path,
-            )
-            if not e.is_load
-        ]
+        entries = [e for e in self._discover(payload, table) if not e.is_load]
         pk = self.catalog.get_primary_key(payload.schema, table)
         if not pk:
             raise ValueError("advance_state requires a primary key (bucketed state)")
         if not entries:  # empty window: state unchanged, just version forward
-            state = self.spark.table(state_table)
-            save_state_bucketed(
-                state, new_state_table, pk,
-                n_buckets=n_buckets or _bucket_count(self.spark, state_table),
+            state.save_state_bucketed(
+                self.spark.table(state_table), new_state_table, pk,
+                n_buckets=n_buckets or state._table_info(self.spark, state_table)[0],
             )
             self._stamp_state_window(new_state_table, payload)
             return self.spark.table(new_state_table)
-        changes = self.spark.read.option("mergeSchema", "true").parquet(
-            *[e.path for e in entries]
-        )
         # same drift gate as snapshot_table: a column added to the CDC
         # stream mid-window raises the catalog-aware error instead of being
         # silently dropped by the merge's state-schema projection; a delta
         # MISSING state columns surfaces as an unresolved column in the
         # merge, which is correct (the state schema is the contract)
         columns = self.catalog.get_table_columns(payload.schema, table)
-        check_schema_containment(changes.columns, list(columns))
-        seqd = with_sequence(changes, build_manifest(self.spark, entries))
-        current_buckets = _bucket_count(self.spark, state_table)
-        if n_buckets is not None and n_buckets != current_buckets:
+        seqd = read_change_log(self.spark, entries, expected_columns=list(columns))
+        if n_buckets is not None and n_buckets != state._table_info(
+            self.spark, state_table
+        )[0]:
             # re-bucketing: touched-file reuse is impossible (every bucket's
             # membership changes), so fall back to the full rewrite
-            merged = merge_into_state(self.spark, state_table, seqd, pk)
-            save_state_bucketed(merged, new_state_table, pk, n_buckets=n_buckets)
+            merged = state.merge_into_state(self.spark, state_table, seqd, pk)
+            state.save_state_bucketed(merged, new_state_table, pk, n_buckets=n_buckets)
             self._stamp_state_window(new_state_table, payload)
             return self.spark.table(new_state_table)
         # the merge reads Op for its delete arm and drops the envelope
         # itself; only the delta's buckets are rewritten — untouched
-        # buckets' files carry over byte-identical (operators/state.py)
-        new_state = merge_into_state_touched(
+        # buckets' files carry over byte-identical (operators/state.py).
+        # Looked up through the module at call time, so a wrapper installed
+        # on ``state.merge_into_state_touched`` sees the call.
+        new_state = state.merge_into_state_touched(
             self.spark, state_table, seqd, pk, new_state_table
         )
         self._stamp_state_window(new_state_table, payload)
         return new_state
 
     def _stamp_state_window(self, table_name: str, payload: CdcPayload) -> None:
-        def _utc(dt: datetime) -> datetime:
-            # naive bounds are UTC by the same convention the manifest
-            # filter applies (manifest.py:_aware) — stamp them as such so
-            # the round-trip through state_window is unambiguous
-            return dt if dt.tzinfo else dt.replace(tzinfo=timezone.utc)
-
+        # stamped in UTC, the convention the manifest filter applies to
+        # naive bounds, so the round-trip through state_window is unambiguous
         props = {}
         if payload.start_date:
             props["cdc.window.start"] = _utc(payload.start_date).isoformat()
@@ -306,20 +282,12 @@ class CdcValidator:
             for t in self._tables(payload)
             if t in state_tables and t in new_state_tables
         ]
-        results: dict[str, DataFrame] = {}
-        with ThreadPoolExecutor(
-            max_workers=max(1, min(payload.max_parallel_tables, 32))
-        ) as ex:
-            futures = {
-                t: ex.submit(
-                    self.advance_state, payload, t,
-                    state_tables[t], new_state_tables[t], n_buckets,
-                )
-                for t in tables
-            }
-            for t, fut in futures.items():
-                results[t] = fut.result()
-        return results
+        return _fan_out(
+            payload, tables,
+            lambda t: self.advance_state(
+                payload, t, state_tables[t], new_state_tables[t], n_buckets
+            ),
+        )
 
     def drift_between_states(
         self,

@@ -187,7 +187,6 @@ def diff_tables(
     common = [c for c in source.columns if c in set(target.columns)]
     source = source.select(*common)
     target = target.select(*common)
-    value_cols = common if not primary_key else common
 
     if not primary_key:
         src_count = source.count()
@@ -214,8 +213,8 @@ def diff_tables(
     # persist the (n_chunks-row) chunk relations: counts, the mismatch
     # collect, and chunks_compared all read them — without the persist each
     # action would recompute the full table scans
-    s_all = _chunked(source, primary_key, chunk_size, value_cols, spec).persist()
-    t_all = _chunked(target, primary_key, chunk_size, value_cols, spec).persist()
+    s_all = _chunked(source, primary_key, chunk_size, common, spec).persist()
+    t_all = _chunked(target, primary_key, chunk_size, common, spec).persist()
     try:  # always unpersist — a bad chunk_spec or task failure mid-action
         # must not leak the cached relations for the session lifetime
         # (standing validators reuse one session across many runs)
@@ -245,8 +244,8 @@ def diff_tables(
     only_src = only_tgt = None
     if drill_down and bad_chunks:
         # Row-level drill-down via keyed hash anti-join, both directions.
-        s_h = source.withColumn("_row_hash", row_digest(source, value_cols))
-        t_h = target.withColumn("_row_hash", row_digest(target, value_cols))
+        s_h = source.withColumn("_row_hash", row_digest(source, common))
+        t_h = target.withColumn("_row_hash", row_digest(target, common))
         keys = [*primary_key, "_row_hash"]
         only_src = s_h.join(t_h, on=keys, how="left_anti").drop("_row_hash")
         only_tgt = t_h.join(s_h, on=keys, how="left_anti").drop("_row_hash")

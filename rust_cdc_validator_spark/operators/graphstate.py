@@ -276,9 +276,9 @@ def _write_adj_manifest(
     # enc_dict/enc_adj parquet): delete the whole derived/ subtree so a
     # stale encoding can never serve the new graph
     try:
-        from rust_cdc_validator_spark.operators.state import _hadoop_fs
+        from rust_cdc_validator_spark.sources.manifest import _fs
 
-        fs, p, _ = _hadoop_fs(spark, f"{path}/derived")
+        _, p, fs = _fs(spark, f"{path}/derived")
         if fs.exists(p):
             fs.delete(p, True)
     except Exception:
@@ -317,15 +317,13 @@ def _load_adj_manifest(spark: SparkSession, path: str) -> dict | None:
     """None for a legacy (pre-manifest, flat ``adj/``) state."""
     import json
 
-    from rust_cdc_validator_spark.operators.state import (
-        _fs_read_text,
-        _hadoop_fs,
-    )
+    from rust_cdc_validator_spark.operators.state import _fs_read_text
+    from rust_cdc_validator_spark.sources.manifest import _fs
 
     if path in _ADJ_MANIFEST_CACHE:
         return _ADJ_MANIFEST_CACHE[path]
     uri = _adj_manifest_path(path)
-    fs, p, _ = _hadoop_fs(spark, uri)
+    _, p, fs = _fs(spark, uri)
     if not fs.exists(p):
         m = None
     else:
@@ -629,10 +627,10 @@ def _derived_ready(spark: SparkSession, uri: str) -> bool:
     """True iff a derived parquet relation was COMMITTED at ``uri``
     (Spark's _SUCCESS marker — a killed writer leaves no marker, so a
     partial directory is recomputed, never read)."""
-    from rust_cdc_validator_spark.operators.state import _hadoop_fs
+    from rust_cdc_validator_spark.sources.manifest import _fs
 
     try:
-        fs, p, _ = _hadoop_fs(spark, f"{uri}/_SUCCESS")
+        _, p, fs = _fs(spark, f"{uri}/_SUCCESS")
         return bool(fs.exists(p))
     except Exception:
         return False

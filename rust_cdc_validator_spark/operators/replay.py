@@ -43,6 +43,8 @@ from rust_cdc_validator_spark.sources.manifest import ManifestEntry, build_manif
 # 2^40 rows per file leaves room for any real parquet file while keeping
 # (file_rank, row_index) packable into one orderable int64.
 _SEQ_FILE_STRIDE = 1 << 40
+# the total replay order ``with_sequence`` attaches
+SEQ_COL = "_seq"
 
 
 def _norm_path(col: F.Column) -> F.Column:
@@ -86,58 +88,58 @@ def with_sequence(
     )
     joined = tagged.join(F.broadcast(manifest_keyed), on="_path", how="inner")
     return joined.withColumn(
-        "_seq",
+        SEQ_COL,
         F.col("file_seq") * F.lit(_SEQ_FILE_STRIDE) + F.col("_row_idx"),
     ).drop("_path", "_row_idx", "file_seq", "is_load")
 
 
-def net_effect(
-    changes: DataFrame,
-    primary_key: list[str],
-    op_col: str = OP_COL,
-    seq_col: str = "_seq",
-    drop_envelope: bool = True,
-) -> DataFrame:
+def last_change_per_key(changes: DataFrame, primary_key: list[str]) -> DataFrame:
+    """Reduce a sequenced change log to its LAST change per key by ``_seq``,
+    keeping the op code as ``_op`` (null ⇒ 'I', the LOAD-file case) and
+    dropping the envelope. ``net_effect`` resolves the deletes away; a state
+    merge keeps them, since it must see them to remove state rows.
+
+    The rank filter sits directly on the window, so Spark plans it as a
+    map-side WindowGroupLimit (pinned in tests/test_plans.py).
+    """
+    w = Window.partitionBy(*primary_key).orderBy(F.col(SEQ_COL).desc())
+    return (
+        changes.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .withColumn("_op", F.coalesce(F.col(OP_COL), F.lit("I")))
+        .drop("_rn", SEQ_COL, *ENVELOPE_COLS)
+    )
+
+
+def net_effect(changes: DataFrame, primary_key: list[str]) -> DataFrame:
     """Reduce an ordered change log to final table state.
 
-    ``changes`` carries data columns + ``op_col`` ('I'/'U'/'D'; null ⇒ 'I',
-    the LOAD-file case) + ``seq_col`` (total order). Result: one row per live
-    primary key — identical to sequentially applying every change in
-    ``seq_col`` order (insert/upsert/delete), the reference's fixpoint.
+    ``changes`` carries data columns + ``Op`` ('I'/'U'/'D'; null ⇒ 'I',
+    the LOAD-file case) + ``_seq`` (total order). Result: one row per live
+    primary key, without the envelope columns — identical to sequentially
+    applying every change in ``_seq`` order (insert/upsert/delete), the
+    reference's fixpoint.
 
     Op matching is exact equality; the reference's substring ``contains('D')``
     (postgres_operator_impl.rs:302-315,345) is a looseness, not a semantic
     (SURVEY.md §2.2 P3).
     """
-    op = F.coalesce(F.col(op_col), F.lit("I"))
     if not primary_key:
         # No PK → append-only replay: deletes/updates have no key to address.
-        out = changes.filter(op != F.lit("D")).drop(seq_col)
-        return out.drop(*ENVELOPE_COLS) if drop_envelope else out
-
-    w = Window.partitionBy(*primary_key).orderBy(F.col(seq_col).desc())
-    last = (
-        changes.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", seq_col)
-    )
-    final = last.filter(F.coalesce(F.col(op_col), F.lit("I")) != F.lit("D"))
-    return final.drop(*ENVELOPE_COLS) if drop_envelope else final
+        op = F.coalesce(F.col(OP_COL), F.lit("I"))
+        return changes.filter(op != F.lit("D")).drop(SEQ_COL, *ENVELOPE_COLS)
+    last = last_change_per_key(changes, primary_key)
+    return last.filter(F.col("_op") != F.lit("D")).drop("_op")
 
 
-def net_effect_partial(
-    changes: DataFrame,
-    primary_key: list[str],
-    op_col: str = OP_COL,
-    seq_col: str = "_seq",
-) -> DataFrame:
+def net_effect_partial(changes: DataFrame, primary_key: list[str]) -> DataFrame:
     """Net effect over PARTIAL-image updates, in ONE hash aggregation.
 
     The reference replays FULL row images (every DMS record carries the
     whole row, postgres_operator_impl.rs:193-260), so last-row-wins is
     enough. DMS/Debezium can also emit partial images — an update carries
     only the changed columns, NULL meaning "unchanged". Final state is then
-    per key, per COLUMN: the last non-null value in ``seq_col`` order, with
+    per key, per COLUMN: the last non-null value in ``_seq`` order, with
     delete fencing — a 'D' tombstone kills the key unless a later I/U
     revives it, and revival must not resurrect pre-delete column values.
 
@@ -156,18 +158,18 @@ def net_effect_partial(
     (map-side) combine — pinned in tests/test_plans.py — so at 100 TB the
     single shuffle carries one reduced row per (task, hot key), not the
     whole change log; unlike ``net_effect``'s last-row-wins, it is correct
-    when updates carry column subsets. Ties cannot occur: ``seq_col`` is
+    when updates carry column subsets. Ties cannot occur: ``_seq`` is
     unique by construction (with_sequence packs file rank + row index).
     """
     if not primary_key:
         raise ValueError("partial-image net effect requires a primary key")
-    op = F.coalesce(F.col(op_col), F.lit("I"))
+    op = F.coalesce(F.col(OP_COL), F.lit("I"))
     is_del = op == F.lit("D")
-    seq = F.col(seq_col)
+    seq = F.col(SEQ_COL)
     value_cols = [
         c
         for c in changes.columns
-        if c not in primary_key and c != op_col and c != seq_col
+        if c not in primary_key and c != OP_COL and c != SEQ_COL
     ]
     aggs = [
         F.max(F.when(is_del, seq)).alias("_d"),
@@ -207,21 +209,19 @@ def union_evolving(epochs: list[DataFrame]) -> DataFrame:
     return out
 
 
-def replay_snapshot(
+def read_change_log(
     spark,
     entries: list[ManifestEntry],
-    primary_key: list[str],
     expected_columns: list[str] | None = None,
     file_format: str = "parquet",
     schema=None,
 ) -> DataFrame:
-    """End-to-end snapshot of one table: manifest → scan → net effect.
-
-    Mirrors CDCOperator::snapshot's per-table pipeline
-    (src/cdc/cdc_operator.rs:57-231) as one declarative plan:
-    read every LOAD + CDC file in a single distributed scan, sequence rows,
-    reduce to final state. ``expected_columns`` triggers the schema-drift
-    containment check (cdc_operator.rs:170-184).
+    """Read a manifest's files as ONE sequenced change log: a single
+    distributed scan of every file, the schema-drift containment check
+    against ``expected_columns`` (cdc_operator.rs:170-184), and ``_seq``
+    from the broadcast manifest join. Both the full snapshot
+    (``replay_snapshot``) and the incremental state advance
+    (``CdcValidator.advance_state``) start here.
 
     ``file_format``: 'parquet' (the reference's only format) or 'csv' —
     DMS's *default* output format, headerless with the envelope columns
@@ -250,31 +250,30 @@ def replay_snapshot(
             df = df.withColumn(c, F.lit(None).cast("string"))
 
     manifest_df = build_manifest(spark, entries)
-    seqd = with_sequence(df, manifest_df, has_row_index=(file_format == "parquet"))
-    return net_effect(seqd, primary_key)
+    return with_sequence(df, manifest_df, has_row_index=(file_format == "parquet"))
 
 
-def apply_changes_sql(
-    changes: DataFrame, primary_key: list[str], seq_col: str = "_seq"
-) -> str:
-    """The equivalent ANSI SQL for ``net_effect`` (used by oracle checks)."""
-    pk = ", ".join(primary_key)
-    cols = [c for c in changes.columns if c not in (seq_col, *ENVELOPE_COLS)]
-    sel = ", ".join(cols)
-    return f"""
-        SELECT {sel} FROM (
-            SELECT *, row_number() OVER (PARTITION BY {pk} ORDER BY {seq_col} DESC) AS _rn
-            FROM __changes__
-        ) t WHERE _rn = 1 AND coalesce({OP_COL}, 'I') <> 'D'
-    """
-
-
-def scd2_history(
-    changes: DataFrame,
+def replay_snapshot(
+    spark,
+    entries: list[ManifestEntry],
     primary_key: list[str],
-    op_col: str = OP_COL,
-    seq_col: str = "_seq",
+    expected_columns: list[str] | None = None,
+    file_format: str = "parquet",
+    schema=None,
 ) -> DataFrame:
+    """End-to-end snapshot of one table: manifest → scan → net effect.
+
+    Mirrors CDCOperator::snapshot's per-table pipeline
+    (src/cdc/cdc_operator.rs:57-231) as one declarative plan: read every
+    LOAD + CDC file in a single distributed scan, sequence rows, reduce to
+    final state. The arguments after ``primary_key`` are
+    ``read_change_log``'s.
+    """
+    changes = read_change_log(spark, entries, expected_columns, file_format, schema)
+    return net_effect(changes, primary_key)
+
+
+def scd2_history(changes: DataFrame, primary_key: list[str]) -> DataFrame:
     """Type-2 slowly-changing-dimension history from the same ordered
     change log :func:`net_effect` collapses — the history-PRESERVING
     sibling (Kimball & Ross, The Data Warehouse Toolkit ch. 5): one row
@@ -284,7 +283,7 @@ def scd2_history(
     (``valid_to`` = that change's sequence, half-open interval); a D
     closes the chain without opening a version. Appended columns:
 
-    * ``valid_from`` — the opening change's ``seq_col`` value;
+    * ``valid_from`` — the opening change's ``_seq`` value;
     * ``valid_to`` — the next change's, NULL while open;
     * ``is_current`` — this version is the key's live row (true on the
       last change iff it isn't a delete).
@@ -292,11 +291,11 @@ def scd2_history(
     The log's envelope columns are the caller's to drop — a dimension
     build usually keeps them for lineage.
 
-    Spark shape: ONE window pass per key ordered by ``seq_col`` —
-    ``lead(seq)`` closes intervals, ``row_number`` from the top marks
-    currency — then deletes drop (their closing effect already
-    captured by the lead). Same partitioning and sort as
-    ``net_effect``'s last-row filter, so a validator can run both from
+    Spark shape: ONE window pass per key ordered by ``_seq`` —
+    ``lead(seq)`` closes intervals, and a change with no successor is the
+    key's last, so a null lead also marks currency — then deletes drop
+    (their closing effect already captured by the lead). Same partitioning
+    as ``net_effect``'s last-row filter, so a validator can run both from
     one shuffle. A delete followed by a re-insert of the same key
     yields disjoint version chains, exactly like sequential SCD2
     maintenance.
@@ -307,17 +306,15 @@ def scd2_history(
     """
     if not primary_key:
         raise ValueError("scd2_history requires a primary key")
-    op = F.coalesce(F.col(op_col), F.lit("I"))
-    w = Window.partitionBy(*primary_key).orderBy(F.col(seq_col).asc())
-    wd = Window.partitionBy(*primary_key).orderBy(F.col(seq_col).desc())
+    op = F.coalesce(F.col(OP_COL), F.lit("I"))
+    w = Window.partitionBy(*primary_key).orderBy(F.col(SEQ_COL).asc())
     return (
-        changes.withColumn("_next_seq", F.lead(seq_col).over(w))
-        .withColumn("_rev", F.row_number().over(wd))
+        changes.withColumn("_next_seq", F.lead(SEQ_COL).over(w))
         .filter(op != F.lit("D"))
-        .withColumn("valid_from", F.col(seq_col))
+        .withColumn("valid_from", F.col(SEQ_COL))
         .withColumn("valid_to", F.col("_next_seq"))
-        .withColumn("is_current", F.col("_rev") == 1)
-        .drop("_next_seq", "_rev")
+        .withColumn("is_current", F.col("_next_seq").isNull())
+        .drop("_next_seq")
     )
 
 

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from rust_cdc_validator_spark.sources.manifest import _fs
+
 #: rows sampled to estimate serialized row size for shard targeting.
 SIZE_PROBE_ROWS = 2_000
 
@@ -178,11 +180,7 @@ def write_corpus_shards(
     else:
         writer.json(path)
 
-    spark = df.sparkSession
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(hconf)
+    jvm, p, fs = _fs(df.sparkSession, path)
     files = []
     for st in fs.listStatus(p):
         name = st.getPath().getName()
@@ -216,10 +214,8 @@ def read_manifest(spark: SparkSession, path: str) -> dict:
     ``InputStream.read(byte[])`` can never fill a Python bytearray. A
     JDK BufferedReader line loop over the Hadoop FS stream satisfies
     both (strings cross py4j fine; works on any Hadoop-visible FS)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path, "_MANIFEST.json")
-    fs = p.getFileSystem(hconf)
+    jvm, base, fs = _fs(spark, path)
+    p = jvm.org.apache.hadoop.fs.Path(base, "_MANIFEST.json")
     reader = jvm.java.io.BufferedReader(
         jvm.java.io.InputStreamReader(fs.open(p), "UTF-8")
     )

@@ -55,19 +55,21 @@ def is_load_file(path: str) -> bool:
     return "LOAD" in posixpath.basename(path)
 
 
-def date_path(day: datetime) -> str:
-    """Zero-padded ``YYYY/MM/DD/`` fragment (reference: s3_operator.rs:145-154)."""
-    return f"{day.year:04d}/{day.month:02d}/{day.day:02d}/"
-
-
 _DATA_SUFFIXES = (".parquet", ".csv", ".csv.gz")
 
 
 def _fs(spark, root: str):
+    """``(jvm, Path(root), FileSystem)`` through Spark's Hadoop configuration
+    — the one accessor every Hadoop-FS caller in the package goes through."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     hpath = jvm.org.apache.hadoop.fs.Path(root)
     return jvm, hpath, hpath.getFileSystem(conf)
+
+
+def _utc(dt: datetime) -> datetime:
+    """``dt`` in UTC; a naive value is taken to be UTC already."""
+    return dt.astimezone(timezone.utc) if dt.tzinfo else dt.replace(tzinfo=timezone.utc)
 
 
 def _list_files_recursive(fs, hpath) -> list[tuple[str, float]]:
@@ -87,7 +89,7 @@ def _hadoop_list(spark, root: str) -> list[tuple[str, float]]:
 
     Works for file://, hdfs://, s3a:// alike. Returns [] for missing roots.
     """
-    jvm, hpath, fs = _fs(spark, root)
+    _, hpath, fs = _fs(spark, root)
     if not fs.exists(hpath):
         return []
     return _list_files_recursive(fs, hpath)
@@ -117,62 +119,43 @@ def _hadoop_list_date_narrowed(
     folder's path date lower-bounds its files' modification times; the
     per-file ``mtime < stop_date`` filter downstream would drop them anyway.
 
-    Non-date entries under the root (no 4-digit-year folder) fall back to a
-    recursive listing of that subtree, preserving behavior for layouts
-    without date folders.
+    Non-date entries at any level (a directory whose name is not a
+    4-digit year, 2-digit month or 2-digit day where one is expected) fall
+    back to a recursive listing of that subtree, preserving behavior for
+    layouts without date folders. Data files found directly in the root, a
+    year or a month folder are kept. The window bounds are read as UTC
+    dates (naive ⇒ UTC), the timezone of DMS's date folders.
     """
-    jvm, root_path, fs = _fs(spark, root)
+    _, root_path, fs = _fs(spark, root)
     if not fs.exists(root_path):
         return []
-    lo = (start_date.year, start_date.month, start_date.day)
-    hi = (
-        (stop_date.year, stop_date.month, stop_date.day)
-        if stop_date is not None
-        else (9999, 12, 31)
-    )
+    lo = _utc(start_date).timetuple()[:3]
+    hi = _utc(stop_date).timetuple()[:3] if stop_date is not None else (9999, 12, 31)
+    widths = (4, 2, 2)  # YYYY / MM / DD
     out: list[tuple[str, float]] = []
 
-    def _num(name: str, width: int) -> int | None:
-        return int(name) if len(name) == width and name.isdigit() else None
+    def walk(path, date: tuple[int, ...]) -> None:
+        # ``date`` holds the folder numbers from the root down to ``path``
+        for st in fs.listStatus(path):
+            name = st.getPath().getName()
+            if st.isFile():
+                if name.endswith(_DATA_SUFFIXES):
+                    out.append(
+                        (st.getPath().toString(), st.getModificationTime() / 1000.0)
+                    )
+                continue
+            if not (len(name) == widths[len(date)] and name.isdigit()):
+                out.extend(_list_files_recursive(fs, st.getPath()))
+                continue
+            sub = date + (int(name),)
+            if not (lo[: len(sub)] <= sub <= hi[: len(sub)]):
+                continue
+            if len(sub) == len(widths):  # a day folder in the window
+                out.extend(_list_files_recursive(fs, st.getPath()))
+            else:
+                walk(st.getPath(), sub)
 
-    for st_y in fs.listStatus(root_path):
-        name_y = st_y.getPath().getName()
-        if st_y.isFile():
-            if name_y.endswith(_DATA_SUFFIXES):
-                out.append(
-                    (st_y.getPath().toString(), st_y.getModificationTime() / 1000.0)
-                )
-            continue
-        y = _num(name_y, 4)
-        if y is None:  # non-date dir: recursive fallback
-            out.extend(_list_files_recursive(fs, st_y.getPath()))
-            continue
-        if not (lo[0] <= y <= hi[0]):
-            continue
-        for st_m in fs.listStatus(st_y.getPath()):
-            if st_m.isFile():
-                p = st_m.getPath().toString()
-                if p.endswith(_DATA_SUFFIXES):
-                    out.append((p, st_m.getModificationTime() / 1000.0))
-                continue
-            m = _num(st_m.getPath().getName(), 2)
-            if m is None:  # non-date dir inside a year dir: lossless fallback
-                out.extend(_list_files_recursive(fs, st_m.getPath()))
-                continue
-            if not (lo[:2] <= (y, m) <= hi[:2]):
-                continue
-            for st_d in fs.listStatus(st_m.getPath()):
-                if st_d.isFile():
-                    p = st_d.getPath().toString()
-                    if p.endswith(_DATA_SUFFIXES):
-                        out.append((p, st_d.getModificationTime() / 1000.0))
-                    continue
-                d = _num(st_d.getPath().getName(), 2)
-                if d is None:
-                    out.extend(_list_files_recursive(fs, st_d.getPath()))
-                    continue
-                if lo <= (y, m, d) <= hi:
-                    out.extend(_list_files_recursive(fs, st_d.getPath()))
+    walk(root_path, ())
     return out
 
 
@@ -221,9 +204,6 @@ def discover_files(
         else:
             entries = _hadoop_list(spark, table_root)
 
-    def _aware(dt: datetime) -> datetime:
-        return dt if dt.tzinfo else dt.replace(tzinfo=timezone.utc)
-
     kept: list[tuple[str, float, bool]] = []
     for path, mtime in entries:
         load = is_load_file(path)
@@ -231,9 +211,9 @@ def discover_files(
             continue
         if mode is FileMode.DATE_AWARE and not load:
             ts = datetime.fromtimestamp(mtime, tz=timezone.utc)
-            if start_date is not None and ts < _aware(start_date):
+            if start_date is not None and ts < _utc(start_date):
                 continue
-            if stop_date is not None and ts >= _aware(stop_date):
+            if stop_date is not None and ts >= _utc(stop_date):
                 continue
         kept.append((path, mtime, load))
 

@@ -295,10 +295,8 @@ def vacuum_edge_state_versions(
         _load_adj_manifest,
         _resolve_adj_entry,
     )
-    from rust_cdc_validator_spark.operators.state import (
-        _fs_list_names,
-        _hadoop_fs,
-    )
+    from rust_cdc_validator_spark.operators.state import _fs_list_names
+    from rust_cdc_validator_spark.sources.manifest import _fs
 
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 — vacuum never drops HEAD")
@@ -315,7 +313,7 @@ def vacuum_edge_state_versions(
     def _under_root(p: str) -> bool:
         return (p.rstrip("/") + "/").startswith(root_norm + "/")
 
-    fs, _, jvm = _hadoop_fs(spark, state_root)
+    jvm, _, fs = _fs(spark, state_root)
     hpath = jvm.org.apache.hadoop.fs.Path
 
     def _walk_files(base: str) -> list[str]:

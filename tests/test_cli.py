@@ -4,6 +4,7 @@ generated bucket (the same flow as `python -m rust_cdc_validator_spark`)."""
 from __future__ import annotations
 
 import json
+from datetime import datetime, timezone
 
 import pytest
 
@@ -64,6 +65,45 @@ def test_cli_validate_mismatch_exit_code(spark, bucket):
         "--output", out, "--only-datadiff", "--source-root", bad,
     ])
     assert rc == 1  # MISMATCH → exit 1
+
+
+@pytest.mark.parametrize(
+    "start,want_v",
+    [
+        # 05:00+02:00 is 03:00Z: the 04:00Z file is inside the window
+        ("2024-03-01T05:00:00+02:00", 2),
+        # 03:30-02:00 is 05:30Z: the 04:00Z file is before the window
+        ("2024-03-01T03:30:00-02:00", 1),
+    ],
+)
+def test_cli_start_date_keeps_utc_offset(spark, tmp_path, start, want_v):
+    """An offset on --start-date shifts the window; it is not discarded.
+    Read as UTC wall time, each start would flip the file's side."""
+    import os
+
+    from tests.cdc_fixtures import write_cdc_file
+
+    cols = ["Op", "_dms_ingestion_timestamp", "id", "v"]
+    tdir = tmp_path / "bucket" / "db" / "public" / "t"
+    write_cdc_file(f"{tdir}/LOAD00000001.parquet",
+                   [{"Op": "I", "_dms_ingestion_timestamp": "t", "id": 1, "v": 1}],
+                   cols)
+    cdc = f"{tdir}/2024/03/01/a.parquet"
+    write_cdc_file(cdc, [{"Op": "U", "_dms_ingestion_timestamp": "t",
+                          "id": 1, "v": 2}], cols)
+    t = datetime(2024, 3, 1, 4, tzinfo=timezone.utc).timestamp()
+    os.utime(cdc, (t, t))
+    cat = tmp_path / "catalog.json"
+    cat.write_text(json.dumps({"public": {"t": {
+        "columns": {"id": "bigint", "v": "bigint"}, "primary_key": ["id"]}}}))
+    out = str(tmp_path / "out")
+    rc = main([
+        "--bucket-root", str(tmp_path / "bucket"), "--database", "db",
+        "--schema", "public", "--catalog-json", str(cat),
+        "--start-date", start, "--output", out, "--only-snapshot",
+    ])
+    assert rc == 0
+    assert [r["v"] for r in spark.read.parquet(f"{out}/t").collect()] == [want_v]
 
 
 def test_interactive_prompts_fill_missing_args(monkeypatch):

@@ -1,6 +1,6 @@
 from __future__ import annotations
 
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
@@ -162,6 +162,82 @@ def test_date_narrowed_listing_non_date_dirs_fall_back(spark, tmp_path):
     assert any(e.path.endswith("part-0.parquet") for e in entries)
 
 
+def test_date_narrowed_listing_fallbacks_loose_files_and_month_pruning(
+    spark, tmp_path
+):
+    """Pins every branch of the narrowed walk at once: non-date dirs at
+    root, year and month level fall back to a recursive listing; data files
+    sitting directly in a year or month folder are kept; marker and
+    checksum files are never returned; months before the start month and
+    after the stop month are pruned with everything under them, as are
+    days outside [start, stop] and years outside the window."""
+    from rust_cdc_validator_spark.sources.manifest import _hadoop_list_date_narrowed
+
+    cols = ["Op", "_dms_ingestion_timestamp", "id", "v"]
+    row = [{"Op": "U", "_dms_ingestion_timestamp": "t", "id": 1, "v": 2}]
+    root = str(tmp_path / "db/public/t")
+    kept = [
+        "LOAD00000001.parquet",
+        "batch-7/root_fallback.parquet",
+        "batch-7/nested/root_fallback_deep.parquet",
+        "2024/in_year.parquet",
+        "2024/misc/year_fallback.parquet",
+        "2024/03/in_start_month.parquet",
+        "2024/03/extra/month_fallback.parquet",
+        "2024/03/15/start_day.parquet",
+        "2024/04/10/mid.parquet",
+        "2024/05/in_stop_month.parquet",
+        "2024/05/20/stop_day.parquet",
+    ]
+    pruned = [
+        "2023/12/31/prev_year.parquet",
+        "2023/in_prev_year.parquet",
+        "2025/in_next_year.parquet",
+        "2024/02/in_month_before.parquet",
+        "2024/02/28/month_before.parquet",
+        "2024/02/misc/month_before_fallback.parquet",
+        "2024/06/in_month_after.parquet",
+        "2024/06/01/month_after.parquet",
+        "2024/03/14/day_before.parquet",
+        "2024/05/21/day_after.parquet",
+    ]
+    for rel in kept + pruned:
+        write_cdc_file(f"{root}/{rel}", row, cols)
+    for rel in ("_SUCCESS", "2024/_SUCCESS", "2024/03/manifest.json",
+                "2024/03/15/notes.txt", "2024/03/15/part.parquet.crc"):
+        with open(f"{root}/{rel}", "w") as f:
+            f.write("not data")
+
+    listed = _hadoop_list_date_narrowed(
+        spark, root,
+        datetime(2024, 3, 15, tzinfo=timezone.utc),
+        datetime(2024, 5, 20, 12, tzinfo=timezone.utc),
+    )
+    got = sorted(p.split("/db/public/t/", 1)[1] for p, _ in listed)
+    assert got == sorted(kept)
+
+
+def test_date_narrowed_listing_reads_offset_bounds_as_utc_dates(spark, tmp_path):
+    """DMS date folders are UTC days. 01:00+02:00 on 1 March is 23:00Z on
+    29 February, so that UTC day's folder must be listed, and its file
+    written at 23:30Z kept."""
+    import os
+
+    cols = ["Op", "_dms_ingestion_timestamp", "id", "v"]
+    root = str(tmp_path / "db/public/t")
+    p = f"{root}/2024/02/29/late.parquet"
+    write_cdc_file(p, [{"Op": "U", "_dms_ingestion_timestamp": "t", "id": 1, "v": 2}], cols)
+    t = datetime(2024, 2, 29, 23, 30, tzinfo=timezone.utc).timestamp()
+    os.utime(p, (t, t))
+    plus2 = timezone(timedelta(hours=2))
+    entries = discover_files(
+        spark, root, FileMode.DATE_AWARE,
+        start_date=datetime(2024, 3, 1, 1, tzinfo=plus2),
+        stop_date=datetime(2024, 3, 2, tzinfo=plus2),
+    )
+    assert [e.path.rsplit("/", 1)[-1] for e in entries] == ["late.parquet"]
+
+
 def test_absolute_path_mode(spark, tmp_path):
     cols = ["Op", "_dms_ingestion_timestamp", "id", "v"]
     root = str(tmp_path / "db/public/t")
@@ -180,8 +256,8 @@ def test_net_effect_shuffled_input_order_independent(spark):
     rows = [(i % 7, "U" if i % 3 else "I", i, f"v{i}") for i in range(200)]
     rows += [(k, "D", 200 + k, None) for k in (1, 3)]
     df = spark.createDataFrame(rows, "id int, Op string, _seq long, val string")
-    a = net_effect(df, ["id"], drop_envelope=False)
-    b = net_effect(df.orderBy("val"), ["id"], drop_envelope=False)
+    a = net_effect(df, ["id"])
+    b = net_effect(df.orderBy("val"), ["id"])
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     assert a.filter("id in (1,3)").count() == 0
 

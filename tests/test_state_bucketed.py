@@ -265,24 +265,46 @@ def test_touched_merge_fully_deleted_bucket_writes_no_file(spark, state_table):
 
 
 def test_touched_merge_read_strategies_equivalent(spark, state_table):
-    """pruned-files (reads only touched buckets' files, re-shuffles the
-    touched fraction) and bucketed-scan (full exchange-free scan) produce
-    identical state; auto picks pruned-files under the threshold."""
+    """The touched fraction picks the state read: a delta touching one
+    bucket reads only that bucket's files (re-shuffling the touched
+    fraction), a delta touching every bucket takes the exchange-free full
+    bucketed scan. Each must give the same state as merge_into_state."""
+    from rust_cdc_validator_spark.operators.state import _PRUNE_THRESHOLD
+
+    n_buckets = 8
     state0 = net_effect(
         _log(spark, [(i, f"v{i}", None, i) for i in range(200)]), ["id"]
     )
-    save_state_bucketed(state0, state_table, ["id"], n_buckets=8)
-    delta_rows = [(1, "x", "U", 500), (2, None, "D", 501), (300, "n", "I", 502)]
+    save_state_bucketed(state0, state_table, ["id"], n_buckets=n_buckets)
+    by_bucket = {}
+    for r in spark.table(state_table).select(
+        "id", bucket_id(["id"], n_buckets).alias("b")
+    ).collect():
+        by_bucket.setdefault(r["b"], []).append(r["id"])
+    assert len(by_bucket) == n_buckets, "fixture must fill every bucket"
+    one = sorted(by_bucket[0])[:3]
+    every = [ids[0] for ids in by_bucket.values()]
+    small = [(one[0], "x", "U", 500), (one[1], None, "D", 501), (one[2], "y", "U", 502)]
+    wide = [(k, None if i % 2 else f"w{k}", "D" if i % 2 else "U", 600 + i)
+            for i, k in enumerate(every)] + [(300, "n", "I", 700)]
 
-    pruned = merge_into_state_touched(
-        spark, state_table, _log(spark, delta_rows), ["id"],
-        f"{state_table}_v2", read_strategy="pruned-files",
-    )
-    scan = merge_into_state_touched(
-        spark, state_table, _log(spark, delta_rows), ["id"],
-        f"{state_table}_v3", read_strategy="bucketed-scan",
-    )
-    assert sorted(map(tuple, pruned.collect())) == sorted(map(tuple, scan.collect()))
+    for rows, new, pruned in ((small, f"{state_table}_v2", True),
+                              (wide, f"{state_table}_v3", False)):
+        touched = {
+            r["b"]
+            for r in _log(spark, rows)
+            .select(bucket_id(["id"], n_buckets).alias("b"))
+            .distinct()
+            .collect()
+        }
+        assert (len(touched) <= _PRUNE_THRESHOLD * n_buckets) == pruned
+        got = merge_into_state_touched(
+            spark, state_table, _log(spark, rows), ["id"], new
+        )
+        want = merge_into_state(spark, state_table, _log(spark, rows), ["id"])
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect())
+        )
 
 
 def test_dropping_old_version_leaves_linked_version_readable(spark, state_table):
